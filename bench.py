@@ -74,16 +74,18 @@ LAST ~2000 chars of stdout, and r09's single line outgrew that (its
 recorded wrapper has ``parsed: null`` and a tail that starts
 mid-object, silently disabling regime normalization downstream). The
 FULL artifact therefore goes to a side file ``BENCH_FULL_r{N}.json``
-(N = current round, inferred from VERDICT.md) and the printed line
-carries only the compact core — headline totals, flags, probes, and
-the 17 per-query medians — with ``detail_artifact`` naming the side
-file. A length guard drops the per-query map from the line too if it
-ever nears the capture limit. ``_prev_artifact`` prefers side files,
-sorts rounds NUMERICALLY (lexicographic glob order breaks at r100),
-skips the current round's own artifact (a same-round re-run would
-otherwise compare against itself, masking a regime shift), and — for
-legacy wrappers like r09's — salvages what it can from the truncated
-tail.
+(N = current round, inferred from VERDICT.md; any scale other than the
+headline sf0.1 writes ``BENCH_FULL_r{N}_sf{sf}.json`` instead, so a
+smoke run at a small scale never overwrites the sf0.1 sweep) and the
+printed line carries only the compact core — headline totals, flags,
+probes, and the 17 per-query medians — with ``detail_artifact`` naming
+the side file. A length guard drops the per-query map from the line
+too if it ever nears the capture limit. ``_prev_artifact`` prefers
+(unsuffixed) side files, sorts rounds NUMERICALLY (lexicographic glob
+order breaks at r100), skips the current round's own artifact (a
+same-round re-run would otherwise compare against itself, masking a
+regime shift), and — for legacy wrappers like r09's — salvages what it
+can from the truncated tail.
 
 ``value_noise_gated`` is STRICTLY ANCILLARY (advice r08): per-query
 dispersion alone cannot distinguish host noise from plan-induced
@@ -693,6 +695,14 @@ def apply_drift_fallback(art: dict) -> dict:
     return art
 
 
+def detail_artifact_name(rnd: int | None, sf: str) -> str:
+    """Side-file name for this run's full artifact. Only the headline
+    scale (sf0.1) writes the unsuffixed name ``_prev_artifact`` reads;
+    other scales get an ``_sf{sf}`` suffix."""
+    base = f"BENCH_FULL_r{rnd:02d}" if rnd else "BENCH_FULL"
+    return f"{base}.json" if sf == "0.1" else f"{base}_sf{sf}.json"
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -727,8 +737,7 @@ def main() -> None:
         art = regime_fields(art, prev[1], prev[0])
         retest_family_flags(spark, sf_dir, art, prev[1])
     root = Path(__file__).resolve().parent
-    rnd = _current_round(root)
-    detail = f"BENCH_FULL_r{rnd:02d}.json" if rnd else "BENCH_FULL.json"
+    detail = detail_artifact_name(_current_round(root), sf)
     (root / detail).write_text(json.dumps(art, indent=1))
     print(compact_line(art, detail))
 

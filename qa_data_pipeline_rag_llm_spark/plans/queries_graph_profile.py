@@ -15,14 +15,13 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from qa_data_pipeline_rag_llm_spark.plans.queries import _t, register
 
 PR_ITERS = 5
 PR_ONE = 1_000_000_000  # rank 1.0 in fixed-point
-PR_CKPT_EVERY = 6  # lineage budget between eager checkpoints (see loop)
 
 
 @register(
@@ -57,11 +56,14 @@ PR_CKPT_EVERY = 6  # lineage budget between eager checkpoints (see loop)
     "the bipartite customer↔supplier co-purchase graph, in exact "
     "fixed-point arithmetic (1.0 ≡ 10^9; floor-div contributions) so the "
     "iterative loop is bit-reproducible and replayable as a DuckDB "
-    "recursive CTE. Spark side: edges+degrees computed once and "
-    "persisted, one join+agg shuffle per iteration — the standard "
-    "DataFrame-iteration pattern (GraphX-free). Long sums suffice at "
-    "this degree distribution; the 100 TB upgrade is DECIMAL(38,0) "
-    "accumulation with the same floor-div semantics.",
+    "recursive CTE. Spark side: the edge list with its out-degree (a "
+    "count window over src) is built once and persisted, hash-partitioned "
+    "and sorted by src; the first step needs no join, since every node "
+    "starts at 1.0; each later step sort-merge-joins the ranks to the "
+    "persisted edges in place, so an iteration costs one shuffle (the "
+    "dst aggregation). Long sums suffice at this degree distribution; the "
+    "100 TB upgrade is DECIMAL(38,0) accumulation with the same "
+    "floor-div semantics.",
 )
 def pagerank_cust_supp(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
@@ -75,44 +77,39 @@ def pagerank_cust_supp(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     edges = fwd.unionByName(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    deg = edges.groupBy("src").agg(F.count("*").alias("out_deg"))
-    # contribution edges, reused every iteration — persist once
-    edges_deg = edges.join(deg, "src").persist()
-    ranks = edges.select(F.col("src").alias("node")).distinct().withColumn(
-        "r", F.lit(PR_ONE).cast("long")
-    )
+    # The window leaves the persisted frame hash-partitioned and sorted by
+    # src, which is exactly the layout the per-iteration join needs.
+    edges_deg = edges.withColumn(
+        "out_deg", F.count(F.lit(1)).over(Window.partitionBy("src"))
+    ).persist()
     base = PR_ONE * 15 // 100
-    # NOT a broadcast-join candidate despite the tiny rank vector:
-    # interleaved A/B (r12, 3 trials) measured forced-broadcast at
-    # parity-to-slightly-slower (6.4–6.7 s vs 6.3–6.4 s shuffle) — the
-    # checkpointed ranks are small enough that AQE already picks the
-    # right exchange, and the per-iteration wall is the dst aggregation
-    # shuffle, which broadcasting cannot remove.
+
+    def step(contrib: DataFrame) -> DataFrame:
+        return (
+            contrib.groupBy("dst")
+            .agg(F.expr(f"CAST({base} + (85 * sum(c)) div 100 AS BIGINT)").alias("r"))
+            .withColumnRenamed("dst", "node")
+        )
+
     try:
-        for i in range(PR_ITERS):
-            contrib = edges_deg.join(
+        # Every node starts at 1.0, so the first contributions need no join.
+        ranks = step(edges_deg.select(
+            "dst", F.expr(f"CAST({PR_ONE} AS BIGINT) div out_deg").alias("c")
+        ))
+        for _ in range(PR_ITERS - 1):
+            # A merge join reads the edges in their cached src layout; left
+            # to itself, AQE broadcasts the whole edge frame every
+            # iteration. Broadcasting the rank vector instead costs more
+            # jobs and is no faster.
+            ranks = step(edges_deg.hint("merge").join(
                 ranks, edges_deg.src == ranks.node
-            ).select("dst", F.expr("r div out_deg").alias("c"))
-            ranks = (
-                contrib.groupBy("dst")
-                .agg(F.expr(f"CAST({base} + (85 * sum(c)) div 100 AS BIGINT)").alias("r"))
-                .withColumnRenamed("dst", "node")
-            )
-            # Lineage-budget checkpointing (r12 A/B, outputs identical):
-            # with edges_deg PERSISTED, a 5-deep join/agg chain plans and
-            # runs fine in ONE job — per-iteration eager checkpoints paid
-            # 5 job launches for nothing (7.76 → 4.86 s at sf0.1). The
-            # earlier "~10x slower unchecked" adjudication predates the
-            # persisted edge frame. Truncate only when the unchecked
-            # depth hits the budget — the guard a higher PR_ITERS needs —
-            # and ALWAYS checkpoint the final ranks (the unpersist below
-            # relies on nothing returned still reading edges_deg).
-            if (i + 1) % PR_CKPT_EVERY == 0 or i == PR_ITERS - 1:
-                ranks = ranks.localCheckpoint(eager=True)
+            ).select("dst", F.expr("r div out_deg").alias("c")))
+        # The eager checkpoint runs the whole chain, so nothing returned
+        # still reads edges_deg.
+        ranks = ranks.localCheckpoint(eager=True)
     finally:
-        # the final ranks are an eager checkpoint — nothing returned still
-        # reads edges_deg, so its cached blocks must not outlive the query
-        # (long-lived sessions run ~150 registry queries; ADVICE r01)
+        # edges_deg's cached blocks must not outlive the query: long-lived
+        # sessions run ~150 registry queries.
         edges_deg.unpersist()
     return ranks.select("node", F.col("r").alias("rank_e9"))
 

@@ -58,8 +58,7 @@ from qa_data_pipeline_rag_llm_spark.plans.queries_text import _quality_sql
 K_QUAL_T = 0.8
 
 # Bradley–Terry fixed point: strength 1.0 ≡ 10^6; every MM step is
-# integer floor-div so Spark and DuckDB replay identical iterates
-# (the pagerank_cust_supp discipline, queries_graph_profile.py).
+# integer floor-div so Spark and DuckDB replay identical iterates.
 BT_S = 1_000_000
 BT_S2 = BT_S * BT_S
 BT_ITERS = 3
@@ -322,8 +321,7 @@ def _duel_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reference (BT iterations reference it 3×; the cycle audit's
     # triangle joins 6×) reads the tiny materialized frame instead of
     # replicating the scan subtree — without this the MM loop's nested
-    # self-references compounded to a 204-scan physical plan (the
-    # pagerank_cust_supp lineage-truncation discipline).
+    # self-references compounded to a 204-scan physical plan.
     return (
         duels.groupBy("win_s", "lose_s")
         .agg(F.count(F.lit(1)).alias("w"))
@@ -409,8 +407,8 @@ _PW_FINAL = f"pw{BT_EXCL_ITERS}"
     "principled version of source_temperature_weights' heuristic: "
     "strengths are the MLE of P(i beats j) = p_i/(p_i+p_j), the model "
     "reward-data mixing actually assumes. Every MM step is integer "
-    "floor-div (the pagerank_cust_supp discipline) so DuckDB replays "
-    "identical iterates as unrolled CTEs. One corpus pass to (lang, "
+    "floor-div so DuckDB replays identical iterates as unrolled CTEs. "
+    "One corpus pass to (lang, "
     "source) grain; duels, win matrix and iterations are "
     "|sources|²-bounded broadcast joins — model-sized at any corpus "
     "scale. Sources without both a win and a loss WITHIN THE RETAINED "
@@ -474,8 +472,8 @@ def bt_strengths(pw: DataFrame) -> DataFrame:
         cur = cur.join(
             keep.withColumnRenamed("s", "win_s"), "win_s", "leftsemi"
         ).join(keep.withColumnRenamed("s", "lose_s"), "lose_s", "leftsemi")
-        # model-sized frame; flat lineage across rounds (the MM loop's
-        # pagerank discipline, below). Every SECOND round: each round
+        # model-sized frame, so an eager checkpoint is cheap and keeps
+        # the lineage flat across rounds. Every SECOND round: each round
         # references `cur` 3× (wl twice, the restriction once), so two
         # uncheckpointed rounds cost a 9-node re-expansion of a tiny
         # frame — cheaper than an extra eager job (A/B: 2.77 s vs 3.18
@@ -524,8 +522,9 @@ def bt_strengths(pw: DataFrame) -> DataFrame:
                     "greatest(d, CAST(1 AS BIGINT)) AS BIGINT)"
                 ).alias("p"),
             )
-            # strength table is |players| rows; truncating lineage per
-            # iteration keeps the plan flat (pagerank discipline)
+            # each iteration joins p twice, so an unchecked chain
+            # doubles the plan per iteration; the strength table is
+            # |players| rows, so cutting lineage here is cheap
             .localCheckpoint(eager=True)
         )
     return players.join(p, "source").select(

@@ -305,6 +305,38 @@ def test_prev_artifact_numeric_order_and_skip_current(tmp_path):
     assert data["calibration_sec"] == 0.53
 
 
+def test_detail_artifact_sf_suffix_keeps_headline_sweep(tmp_path):
+    """A run at a scale other than sf0.1 (the preflight's sf0.01 smoke)
+    writes an sf-suffixed side file, so it cannot overwrite the round's
+    sf0.1 sweep; _prev_artifact keeps reading only the unsuffixed name,
+    and the printed line names the file actually written."""
+    import json
+
+    b = _bench()
+    assert b.detail_artifact_name(13, "0.1") == "BENCH_FULL_r13.json"
+    assert b.detail_artifact_name(13, "0.01") == "BENCH_FULL_r13_sf0.01.json"
+    assert b.detail_artifact_name(None, "0.1") == "BENCH_FULL.json"
+    assert b.detail_artifact_name(None, "0.001") == "BENCH_FULL_sf0.001.json"
+
+    (tmp_path / "VERDICT.md").write_text("# VERDICT — round 99\n")
+    (tmp_path / "BENCH_r98.json").write_text(
+        json.dumps({"parsed": {"calibration_sec": 0.5}, "tail": ""})
+    )
+    (tmp_path / "BENCH_FULL_r98_sf0.01.json").write_text(
+        json.dumps({"calibration_sec": 0.9})
+    )
+    name, data = b._prev_artifact(tmp_path)
+    assert name == "BENCH_r98.json"
+    assert data["calibration_sec"] == 0.5
+
+    detail = b.detail_artifact_name(98, "0.01")
+    line = json.loads(
+        b.compact_line({"metric": "m", "value": 1.0, "unit": "sec"}, detail)
+    )
+    assert set(line) == {"metric", "value", "unit", "detail_artifact"}
+    assert line["detail_artifact"] == "BENCH_FULL_r98_sf0.01.json"
+
+
 def test_family_regression_on_query_intersection():
     """Advice r09: a family that GAINED a query must not be flagged for
     the added coverage; a genuine regression on shared queries must."""

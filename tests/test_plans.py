@@ -167,6 +167,24 @@ def test_srp_plan_construction_triggers_no_job(spark, tables):
     assert dag.numTotalJobs() == before
 
 
+def test_pagerank_job_budget(spark, tables):
+    """PageRank's set-up builds the degree-annotated edge frame once, its
+    first step needs no join, and each later step merge-joins the ranks
+    to the cached edges in their src layout: 15 Spark jobs per call,
+    eager checkpoint plus the write. Rescanning the edge inputs or
+    re-broadcasting the edge frame per iteration pushes it past 16."""
+    sc = spark.sparkContext
+    group = "test:pagerank_job_budget"
+    sc.setJobGroup(group, group)
+    try:
+        df = REGISTRY["pagerank_cust_supp"].spark(spark, SF_DIR)
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= 16, n_jobs
+
+
 def test_zscore_broadcasts_stats_side(spark):
     """The 5-row per-type moments table must come back as a broadcast —
     a second shuffle of events to join 5 rows is the classic miss."""
@@ -782,8 +800,8 @@ def test_jaccard_verification_runs_on_set_arrays(spark, name, max_generates):
     ["bradley_terry_source_strengths", "preference_cycle_audit"],
 )
 def test_tournament_plans_are_model_sized(spark, name):
-    """The duel table is eagerly materialized (pagerank lineage
-    discipline): the FINAL plan must contain no parquet scan at all —
+    """The duel table is eagerly materialized, so the corpus pass runs
+    once: the FINAL plan must contain no parquet scan at all —
     everything downstream of the single corpus pass operates on the
     |sources|²-bounded frame. Without the checkpoint the MM loop's
     nested self-references compounded to a 204-scan plan."""

@@ -263,6 +263,18 @@ def test_lloyd_trainer_matches_reference(spark, tables):
     assert got == want
 
 
+def test_lloyd_trainer_empty_input(spark, tables):
+    """No vectors or no cells means no centroids — not an argmin over an
+    empty centroid list, which would be malformed SQL."""
+    from qa_data_pipeline_rag_llm_spark.operators.ivf import (
+        train_centroids_lloyd,
+    )
+
+    emb = tables["embeddings"]
+    assert train_centroids_lloyd(emb.filter(F.col("vec_id") < 0), 8) == []
+    assert train_centroids_lloyd(emb, n_cells=0) == []
+
+
 def test_dot_norm_name_path_bit_identical(spark, tables):
     """r13: dot/norm built from column NAMES parse to the same Catalyst
     expression as the Column-lambda twins — results must be bit-identical
